@@ -5,12 +5,15 @@ from the network, recompute the OD cost table, diff against the
 benchmark, and fold per-way stats (criticality.js:232-303); score =
 (0.4·timeScore + 0.6·unroutableScore)·100 (criticality.js:96-110).
 
-Spark shape: a scenarios DataFrame (one row per way) fanned out through
-``applyInPandas``; the graph + benchmark are computed once and shipped
-via closure (broadcast) — the reference's per-way osrm-contract
-(criticality.js:197-225) becomes a boolean edge mask. The final scoring
-is relational (single agg for the two maxima, cf. A2
-criticality.js:96-99).
+Spark shape: a scenarios DataFrame (one row per active way) fanned out
+through ``applyInPandas`` in exactly one pass; the graph + benchmark are
+computed once on the driver and shipped as one broadcast — the
+reference's per-way osrm-contract (criticality.js:197-225) becomes a
+boolean edge mask. The per-way stats (one small row per way) are
+collected once, and the final scoring — two maxima over all ways, then
+the per-way formula (criticality.js:96-110) — runs in pandas on the
+driver. The returned DataFrame is built from those local rows, so
+actions on it never re-run the kernel.
 """
 
 from __future__ import annotations
@@ -18,7 +21,6 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from moz_datapipeline_spark.graph.kernel import (
     Graph,
@@ -35,6 +37,14 @@ _STATS_SCHEMA = (
     "way_id string, max_time double, avg_time double, avg_time_nonzero double, "
     "unroutable_pairs long, impacted_pairs long"
 )
+_STATS_DTYPES = {
+    "way_id": object,
+    "max_time": "float64",
+    "avg_time": "float64",
+    "avg_time_nonzero": "float64",
+    "unroutable_pairs": "int64",
+    "impacted_pairs": "int64",
+}
 
 
 def _way_stats(
@@ -124,8 +134,14 @@ def criticality_scores(
 
     ``edges``: pandas (way_id, src, dst, weight) — the full (small)
     graph, broadcast to every task. ``od_nodes_by_id``: node ids of the
-    OD points (pre-snapped). Returns (way_id, score, max_time, ...,
-    unroutable_pairs, impacted_pairs).
+    OD points (pre-snapped). Returns (way_id, max_time, avg_time,
+    avg_time_nonzero, unroutable_pairs, impacted_pairs, score), one row
+    per way.
+
+    The fan-out runs HERE, when the function is called, in exactly one
+    pass: the per-way stats are collected to the driver, scored there,
+    and returned as a DataFrame over those local rows — actions on it
+    re-run no kernel.
 
     Off-network OD points: pass ``od_points_lonlat`` (+ ``node_coords``)
     instead of ``od_nodes_by_id``.  ``snap="edge"`` (default) projects
@@ -200,39 +216,38 @@ def criticality_scores(
 
     from moz_datapipeline_spark.graph.resume import resumable_apply
 
-    stats = resumable_apply(
-        spark,
-        scenarios,
-        ("way_id",),
-        lambda sc: sc.groupBy("way_id").applyInPandas(kernel, _STATS_SCHEMA),
-        checkpoint_dir,
+    try:
+        stats = resumable_apply(
+            spark,
+            scenarios,
+            ("way_id",),
+            lambda sc: sc.groupBy("way_id").applyInPandas(kernel, _STATS_SCHEMA),
+            checkpoint_dir,
+        ).toPandas()
+    finally:
+        # the stats are local now; without this the context stays
+        # resident on every executor until the periodic cleaner GC
+        ctx_bv.destroy()
+    zero_rows = pd.DataFrame(
+        [(w, 0.0, 0.0, 0.0, base_unroutable, 0) for w in pruned],
+        columns=list(_STATS_DTYPES),
     )
-    if pruned:
-        zero_rows = spark.createDataFrame(
-            [(w, 0.0, 0.0, 0.0, base_unroutable, 0) for w in pruned],
-            schema=_STATS_SCHEMA,
-        )
-        stats = stats.unionByName(zero_rows)
+    stats = pd.concat([stats, zero_rows], ignore_index=True).astype(
+        _STATS_DTYPES
+    )
+    return spark.createDataFrame(_score(stats), _STATS_SCHEMA + ", score double")
 
-    # scoring: one agg for the two maxima (A2), broadcast back over ways
-    maxima = stats.agg(
-        F.max(
-            (F.col("unroutable_pairs") + F.col("impacted_pairs"))
-            * F.col("avg_time_nonzero")
-        ).alias("_avg_max_time"),
-        F.max("unroutable_pairs").alias("_max_unroutable"),
-    )
-    scored = stats.crossJoin(F.broadcast(maxima))
-    time_score = F.when(
-        F.col("_avg_max_time") > 0,
-        (F.col("unroutable_pairs") + F.col("impacted_pairs"))
-        * F.col("avg_time_nonzero")
-        / F.col("_avg_max_time"),
-    ).otherwise(0.0)
-    unroutable_score = F.when(
-        F.col("_max_unroutable") > 0,
-        F.col("unroutable_pairs") / F.col("_max_unroutable"),
-    ).otherwise(0.0)
-    return scored.withColumn(
-        "score", (time_score * 0.4 + unroutable_score * 0.6) * 100.0
-    ).drop("_avg_max_time", "_max_unroutable")
+
+def _score(stats: pd.DataFrame) -> pd.DataFrame:
+    """Append ``score`` = (0.4·timeScore + 0.6·unroutableScore)·100 with
+    both parts normalized by their maximum over ALL ways
+    (criticality.js:96-110); a zero maximum scores 0, never NaN."""
+    pairs = (stats["unroutable_pairs"] + stats["impacted_pairs"]).to_numpy(float)
+    unroutable = stats["unroutable_pairs"].to_numpy(float)
+    avg_time = pairs * stats["avg_time_nonzero"].to_numpy(float)
+    avg_max_time = avg_time.max(initial=0.0)
+    max_unroutable = unroutable.max(initial=0.0)
+    zeros = np.zeros(len(stats))
+    time_score = avg_time / avg_max_time if avg_max_time > 0 else zeros
+    unroutable_score = unroutable / max_unroutable if max_unroutable > 0 else zeros
+    return stats.assign(score=(time_score * 0.4 + unroutable_score * 0.6) * 100.0)

@@ -98,6 +98,12 @@ def test_criticality_resume_skips_finished_ways(spark, tmp_path):
         assert keyed.loc[w, "max_time"] == pytest.approx(
             full.set_index("way_id").loc[w, "max_time"]
         )
+    # driver-side scoring on the checkpoint path: the sentinel way has
+    # no impacted or unroutable pair, so both maxima — and every other
+    # way's score — equal the plain run's
+    plain = full.set_index("way_id")
+    for w in keyed.index.drop(seed_way):
+        assert keyed.loc[w, "score"] == pytest.approx(plain.loc[w, "score"]), w
 
 
 def test_resume_rejects_drifted_checkpoint_schema(spark, tmp_path):
